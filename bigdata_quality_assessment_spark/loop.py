@@ -11,13 +11,15 @@ Reference flow (/root/reference/BigDataQualityAssessment_ActiveSampling.py):
       US-LW explorer:255-269 A11→J3→P15→T1→U1→J2
       retrain       :271-273 M4
 
-Spark execution model: the loop is driver-side control flow; all the
-heavy lifting (scoring the full pool, KDE, selection) is lazy
-DataFrame work.
+Spark execution model: the loop is driver-side control flow. Work
+that grows with the pool — scoring, linear binning, explorer top-k —
+is DataFrame work on the cluster; work that grows with the KDE grid —
+the O(ngrid²) convolution, A13's log-pdf error, the pool-pdf lookup
+table — runs on the driver with numpy over ≤3×ngrid collected rows.
 
-  * ``cache()`` the per-iteration scored pool — it feeds metrics AND
-    three explorers, so without it each explorer would rescore from
-    scratch (Catalyst does not CSE across actions).
+  * The scored pool is materialized once per iteration by an eager
+    ``localCheckpoint``: it feeds the binning, the metrics AND the
+    explorers, and Catalyst does not CSE across actions.
   * The TRAINING SET lives on the driver. It is ≤ a few hundred rows
     BY DESIGN (distillation is the whole point of the tool — M4,
     SURVEY.md §2.8), and the reference itself collects it into
@@ -31,12 +33,19 @@ DataFrame work.
     Per-iteration pool copies would be O(n·iters) cluster work for
     frames nothing consumes.
 
-Per iteration exactly two Spark jobs touch the cluster: one fused
-score+metrics+KDE/log-pdf-error pass (the two 1-row metric frames are
-crossJoined so a single action materializes the cached scored pool and
-both reductions), and the one-collect explorer top-k. The pool never leaves the cluster; only argmax rows
-(n_explorers per iteration), scalar metrics, and model parameters
-cross the boundary.
+Per iteration: 3 actions, 6 Spark jobs (as read from
+``perfbench/run.py --workload active_loop --trace 1``):
+
+  1. the scored-pool checkpoint (1 job), which also fills the
+     ``Observation`` of the KDE grid bounds;
+  2. the binning collect (2 jobs: the map stage and the ≤3×ngrid-row
+     result);
+  3. the explorer top-k collect (3 jobs), with the 1-row regression
+     metrics cross-joined onto it.
+
+The pool never leaves the cluster; only binned KDE weights, argmax
+rows (n_explorers per iteration), scalar metrics, and model
+parameters cross the boundary.
 """
 
 from __future__ import annotations
@@ -47,23 +56,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators.density import (
-    histogram,
     interp_uniform_grid,
+    interp_uniform_literal,
     kde_1d,
-    kde_1d_multi,
-    log_pdf_error,
+    kde_1d_multi,  # noqa: F401 — perfbench spans loop.kde_1d_multi
+    kde_bin_multi,
+    kde_convolve_local,
+    log_pdf_error_local,
 )
 from .operators.models import predict_ensemble_stats
 from .operators.score import (
     acquisition_us,
     acquisition_us_lgw,
     acquisition_us_lw,
-    ensemble_stats,
     inverse_density_weights,
     regression_metrics,
 )
 from .operators.select import (
-    argmax,
     middle_match,
     pool_remove,
     train_append,
@@ -227,34 +236,17 @@ def active_sampling_loop(
     from pyspark.sql import Observation
 
     def _pad_bounds(mn, mx, pad: float = 0.01):
-        """kde_1d_multi's internal bounds rule on driver floats — the
+        """kde_bin_multi's internal bounds rule on driver floats — the
         same IEEE double ops the Catalyst expressions perform, so the
         literal path is bit-identical to the aggregate path."""
         span = (mx - mn) if (mx - mn) > 0 else 1.0
         return (mn - pad * span, mx + pad * span)
 
+    no_grid = (np.empty(0), np.empty(0))
     for it in range(n_iter):
         # M2+M3 fused: one narrow mapInPandas pass over the pool carrying
-        # features+truth through — no groupBy shuffle, no join-back
-        # (predict_ensemble + ensemble_stats remain the general path).
-        # ``localCheckpoint(eager=True)`` both MATERIALIZES the pass
-        # (one clean execution — the fanned-out consumers below all
-        # read stored blocks, no racy cold-cache recompute) and
-        # TRUNCATES lineage to a LogicalRDD, so every downstream frame
-        # this iteration builds analyzes a two-node plan instead of the
-        # deep Arrow-inference tree (measured: ~2× faster per-iteration
-        # plan construction). Blocks are reclaimed by the
-        # ContextCleaner when the frame goes out of scope at the next
-        # iteration — the same discipline train/pool already use.
-        #
-        # The KDE grid bounds ride this SAME materialization job as an
-        # Observation (round-15): min/max are summation-order-free, so
-        # the observed values are bit-identical to the one-row bounds
-        # aggregate kde_1d_multi would otherwise run — but the
-        # separate bounds job and its broadcast build disappear from
-        # every iteration (the m4_loop_metrics golden hash pins the
-        # bit-identity; avg-shaped metrics deliberately stay on the
-        # cluster path because THEIR partial-sum order is not free).
+        # features+truth through — no groupBy shuffle, no join-back.
+        scored = score_pool(thetas)
         # Pool membership = NOT an explorer pick (the initial selection
         # stays in the pool, ref :236-237); the pick set is tiny, so it
         # folds into the plan as a literal ``isin`` — no join.
@@ -262,6 +254,8 @@ def active_sampling_loop(
             ~F.col(id_col).isin(*explorer_ids) if explorer_ids else None
         )
         need_pool = "us_lw" in acq_list or "us_lgw" in acq_list
+        # The KDE grid bounds (min/max: summation-order-free) ride the
+        # scored pool's materialization job as an Observation.
         obs = Observation()
         obs_exprs = [
             F.least(F.min("y_mean"), F.min(y_col)).alias("jmn"),
@@ -276,65 +270,52 @@ def active_sampling_loop(
             obs_exprs += [
                 F.min(pool_col).alias("pmn"), F.max(pool_col).alias("pmx"),
             ]
+        # The eager checkpoint runs the scoring pass once; the binning
+        # and explorer actions below read its stored blocks, and their
+        # plans start at a two-node LogicalRDD instead of the deep
+        # Arrow-inference tree.
         scored = (
-            score_pool(thetas)
+            scored
             .withColumn("se", (F.col("y_mean") - F.col(y_col)) * (F.col("y_mean") - F.col(y_col)))
             .observe(obs, *obs_exprs)
             .localCheckpoint(eager=True)
         )
-        ob = obs.get  # filled: the eager checkpoint ran the job
+        ob = obs.get
 
-        # The iteration needs THREE densities of the scored pool —
-        # pred + truth on the shared joint-range A13 grid rebuilt per
-        # iteration (ref :201-205), and (for us_lw/us_lgw) the pool
-        # density of the predicted means over the CURRENT candidates
-        # (custom_KDE(mu(pts_temp)), core/likelihood.py:53-58). One
-        # fused tagged pass computes all three: one scan, one (tag,
-        # node) shuffle, one plan barrier (kde_1d_multi docstring) —
-        # and with the observed literal bounds, ZERO bounds aggregate.
-        if ob["jmn"] is None:
-            # degenerate empty scored pool: min/max observe NULL —
-            # fall back to the in-plan joint-range aggregate
-            # (NULL-propagating), exactly the pre-round-15 plan shape
-            # (round-16, ADVICE r15: _pad_bounds on None raised
-            # TypeError where the old aggregate degraded gracefully)
-            shared = {"range_cols": ["y_mean", y_col]}
-            specs = [
-                {"tag": "pred", "col": "y_mean", "bw": bw, **shared},
-                {"tag": "truth", "col": y_col, "bw": bw, **shared},
-            ]
-        else:
+        # Three densities of the scored pool: pred + truth on the shared
+        # joint-range A13 grid rebuilt per iteration (ref :201-205), and
+        # for us_lw/us_lgw the density of the predicted means over the
+        # CURRENT candidates (custom_KDE(mu(pts_temp)),
+        # core/likelihood.py:53-58). They bin in one tagged pass on the
+        # cluster; the ≤3×ngrid binned rows are convolved on the driver.
+        # A series with no rows (empty scored pool, exhausted
+        # candidates) gets an empty grid: NULL log_pdf_error, NULL pdf.
+        specs = []
+        if ob["jmn"] is not None:
             joint = _pad_bounds(ob["jmn"], ob["jmx"])
-            specs = [
+            specs += [
                 {"tag": "pred", "col": "y_mean", "bw": bw, "bounds": joint},
                 {"tag": "truth", "col": y_col, "bw": bw, "bounds": joint},
             ]
-        if need_pool:
-            if ob.get("pmn") is None:
-                # degenerate empty candidate pool: fall back to the
-                # in-plan bounds aggregate (NULL-propagating), exactly
-                # the pre-round-15 plan shape
-                specs.append(
-                    {"tag": "pool", "col": "y_mean", "bw": bw, "where": not_picked}
-                )
-            else:
-                specs.append(
-                    {
-                        "tag": "pool", "col": "y_mean", "bw": bw,
-                        "where": not_picked,
-                        "bounds": _pad_bounds(ob["pmn"], ob["pmx"]),
-                    }
-                )
-        grids = kde_1d_multi(scored, specs, ngrid=ngrid)
-        pred_grid, truth_grid = grids["pred"], grids["truth"]
-        pool_grid = grids.get("pool")
-
-        # A1-A3/A12 and A13 are 1-row reductions over ``scored``; the
-        # one-row metric frame crossJoins onto the explorer top-k union
-        # below so ONE collect per iteration delivers metrics AND picks.
-        metric_frame = regression_metrics(scored, "y_mean", y_col, "y_var").crossJoin(
-            log_pdf_error(pred_grid, truth_grid)
+        if need_pool and ob["pmn"] is not None:
+            specs.append({
+                "tag": "pool", "col": "y_mean", "bw": bw, "where": not_picked,
+                "bounds": _pad_bounds(ob["pmn"], ob["pmx"]),
+            })
+        grids = (
+            kde_convolve_local(kde_bin_multi(scored, specs, ngrid=ngrid).collect(), ngrid)
+            if specs
+            else {}
         )
+        pool_grid = grids.get("pool", no_grid)
+        lpe = log_pdf_error_local(grids.get("pred", no_grid), grids.get("truth", no_grid))
+
+        # A1-A3/A12 are a 1-row reduction over ``scored``; it crossJoins
+        # onto the explorer top-k union below so ONE collect per
+        # iteration delivers metrics AND picks. They are averages, so
+        # they stay out of the Observation: it merges partial sums in
+        # task-completion order, and a re-run must give equal metrics.
+        metric_frame = regression_metrics(scored, "y_mean", y_col, "y_var")
 
         candidates = (
             scored.filter(not_picked) if explorer_ids else scored
@@ -363,8 +344,8 @@ def active_sampling_loop(
                         F.lit("us").alias("__explorer"))
             )
         if "us_lw" in acq_list:
-            with_fy = interp_uniform_grid(
-                candidates, pool_grid, q_col="y_mean", out_col="pdf_y_mean"
+            with_fy = interp_uniform_literal(
+                candidates, *pool_grid, q_col="y_mean", out_col="pdf_y_mean"
             )
             with_lw = with_fy.withColumn("acq", acquisition_us_lw(with_fy))
             topk_frames.append(
@@ -382,8 +363,8 @@ def active_sampling_loop(
                 candidates, thetas, feature_cols, id_col=id_col,
                 carry_cols=[*feature_cols, y_col, "y_mean", "y_var"],
             )
-            with_g = interp_uniform_grid(
-                jh, pool_grid, q_col="y_mean",
+            with_g = interp_uniform_literal(
+                jh, *pool_grid, q_col="y_mean",
                 out_col="pdf_y_mean", deriv_col="dpdf_y_mean",
             )
             with_lgw = with_g.withColumn("acq", acquisition_us_lgw(with_g))
@@ -397,15 +378,13 @@ def active_sampling_loop(
         union = topk_frames[0]
         for f in topk_frames[1:]:
             union = union.unionByName(f)
-        # ONE job per iteration: the 1-row metric frame rides every
-        # explorer row (broadcast nested-loop), so this collect is the
-        # iteration's only action after the checkpoint.
         rows = union.crossJoin(F.broadcast(metric_frame)).collect()
         m = (
             {c: rows[0][c] for c in metric_frame.columns}
             if rows
             else metric_frame.first().asDict()  # degenerate: empty candidate pool
         )
+        m["log_pdf_error"] = lpe
         m["iter"] = it
         m["train_rows"] = len(train_rows)
         metrics.append(m)

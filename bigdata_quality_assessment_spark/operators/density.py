@@ -13,8 +13,13 @@ Scale notes:
     decomposition (linear binning + grid convolution,
     /root/reference/core/utils.py:105-120) re-expressed relationally —
     the O(data) term dominates at 100 TB and parallelizes linearly.
+    ``kde_bin_multi`` + ``kde_convolve_local`` split the same two
+    phases across the boundary: bin on the cluster, collect the
+    ≤ngrid binned rows per series, convolve with numpy on the driver
+    (``log_pdf_error_local`` and ``interp_uniform_literal`` consume
+    the resulting grids without another grid-sized Spark job).
   * interpolation against a UNIFORM grid is an index computation +
-    broadcast hash equi-join — no range join, no sort, O(data).
+    array lookup — no join, no sort, O(data).
   * trapz over a grid is a lag-window over ≤ngrid rows (tiny); the
     grouped variant partitions by series key for many-series use.
 """
@@ -23,6 +28,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -377,16 +383,16 @@ def kde_1d_multi(
     """A11 (fused, N-way): any number of KDEs over the SAME frame in
     ONE data scan, ONE (tag, node) shuffle, and ONE plan barrier — the
     generalization of ``kde_1d_pair`` that also admits per-series row
-    predicates and per-series evaluation ranges. Built for the §3.1
-    loop, where one iteration needs THREE densities of the scored
-    pool: pred + truth on a shared joint-range grid (A13,
+    predicates and per-series evaluation ranges. The §3.1 loop needs
+    THREE densities of the scored pool per iteration: pred + truth on a
+    shared joint-range grid (A13,
     BigDataQualityAssessment_ActiveSampling.py:199-207) and the
     us_lw/us_lgw pool density of the predicted means over the current
     candidates (core/likelihood.py:53-58). Unfused that is 3 pool
-    passes and 3 barrier plan-compilations per iteration; fused it is
-    one of each — at 100 TB the scan fusion is the win, at bench SF
-    the ~1 s/plan physical-planning cost of each lazy-checkpoint
-    barrier is.
+    passes and 3 barrier plan-compilations; fused it is one of each.
+    The loop itself runs only the binning phase on the cluster
+    (``kde_bin_multi``, this function's phase 1) and convolves the
+    collected bins on the driver (``kde_convolve_local``).
 
     ``specs``: ordered list of dicts with keys
       * ``tag`` (str, unique) — names the output grid;
@@ -417,19 +423,68 @@ def kde_1d_multi(
       * ``bounds`` (DataFrame or (lo, hi) floats, optional) — external
         bounds overriding range derivation. A one-row lo/hi FRAME stays
         lazy and rides the broadcast; a PLAIN ``(lo, hi)`` tuple folds
-        in as literals (round-15): no bounds aggregate, and when every
-        spec is literal-bounded with a float ``bw`` the broadcast
-        cross-join disappears from the plan entirely — the barrier's
-        call-time work shrinks to the binning map stage alone. The
-        §3.1 loop feeds this from an ``Observation`` on the scored
-        pool's materialization job (min/max are order-independent, so
-        the observed bounds are bit-identical to the aggregate's).
+        in as literals: no bounds aggregate, and when every spec is
+        literal-bounded with a float ``bw`` the broadcast cross-join
+        disappears from the plan entirely. The §3.1 loop passes the
+        min/max it observes on the scored pool's materialization job
+        (order-independent, so bit-identical to the aggregate's).
 
     All internal ranges fold into a single one-row aggregate over
     ``df``, so bounds derivation adds no extra pass. Returns
     ``{tag: density(node INT, grid_x DOUBLE, pdf DOUBLE)}``.
     """
     spark = df.sparkSession
+    # The ONE lazy barrier (see kde_1d_pair's): keeps the per-tag
+    # filters from pushing below the aggregate into N source scans,
+    # and is the only physical-plan compilation the whole N-density
+    # family pays.
+    binned = kde_bin_multi(df, specs, ngrid=ngrid, pad=pad).localCheckpoint(eager=False)
+    tags = [s["tag"] for s in specs]
+
+    grid = spark.range(ngrid).select(F.col("id").cast("int").alias("eval_node"))
+    norm_const = 1.0 / (F.col("__bw") * math.sqrt(2.0 * math.pi))
+    kernel = F.exp(
+        -0.5
+        * F.pow((F.col("eval_node") - F.col("node")) * F.col("__dx") / F.col("__bw"), 2)
+    ) * norm_const
+
+    def _convolve(tag: str) -> DataFrame:
+        one = binned.filter(F.col("tag") == tag).drop("tag")
+        return (
+            grid.join(F.broadcast(one), F.lit(True))
+            .groupBy("eval_node")
+            .agg(
+                F.sum(kernel * F.col("w")).alias("kw_sum"),
+                F.sum("w").alias("w_tot"),
+                F.first("__lo").alias("__lo"),
+                F.first("__dx").alias("__dx"),
+            )
+            .select(
+                F.col("eval_node").alias("node"),
+                (F.col("__lo") + F.col("eval_node") * F.col("__dx")).alias("grid_x"),
+                (F.col("kw_sum") / F.col("w_tot")).alias("pdf"),
+            )
+        )
+
+    return {t: _convolve(t) for t in tags}
+
+
+def kde_bin_multi(
+    df: DataFrame,
+    specs: list[dict],
+    ngrid: int = 1024,
+    pad: float = 0.01,
+) -> DataFrame:
+    """A11 phase 1 for ``kde_1d_multi``'s ``specs``: the O(data) linear
+    binning of every series in one tagged pass and one (tag, node)
+    shuffle. Returns ``(tag, node, w, __lo, __dx, __bw)``, at most
+    ``len(specs) × ngrid`` rows; ``__lo``/``__dx``/``__bw`` are the
+    series' grid origin, spacing and bandwidth, constant per tag. A
+    series with no contributing rows has no rows.
+
+    ``kde_1d_multi`` convolves this frame on the cluster;
+    ``kde_convolve_local`` convolves its collected rows on the driver.
+    """
     tags = [s["tag"] for s in specs]
     if len(set(tags)) != len(tags):
         raise ValueError(f"duplicate tags in specs: {tags}")
@@ -443,8 +498,8 @@ def kde_1d_multi(
     # per-tag column sources: names resolved off the broadcast frame
     # ``b`` by default; literal-bounds tags (and float bandwidths)
     # resolve to F.lit instead, so a fully-literal spec list never
-    # builds ``b`` at all (round-15 — drops the bounds aggregate AND
-    # the broadcast cross-join from the plan)
+    # builds ``b`` at all (no bounds aggregate, no broadcast
+    # cross-join in the plan)
     ref: dict[str, Column] = {}
 
     def _ref(name: str) -> Column:
@@ -568,43 +623,59 @@ def kde_1d_multi(
             F.col("c.kbw").alias("__bw"),
         )
     )
-    # The ONE lazy barrier (see kde_1d_pair's): keeps the per-tag
-    # filters from pushing below the aggregate into N source scans,
-    # and is the only physical-plan compilation the whole N-density
-    # family pays.
-    binned = contrib.groupBy("tag", "node").agg(
+    return contrib.groupBy("tag", "node").agg(
         F.sum("w").alias("w"),
         F.first("__lo").alias("__lo"),
         F.first("__dx").alias("__dx"),
         F.first("__bw").alias("__bw"),
-    ).localCheckpoint(eager=False)
+    )
 
-    grid = spark.range(ngrid).select(F.col("id").cast("int").alias("eval_node"))
-    norm_const = 1.0 / (F.col("__bw") * math.sqrt(2.0 * math.pi))
-    kernel = F.exp(
-        -0.5
-        * F.pow((F.col("eval_node") - F.col("node")) * F.col("__dx") / F.col("__bw"), 2)
-    ) * norm_const
 
-    def _convolve(tag: str) -> DataFrame:
-        one = binned.filter(F.col("tag") == tag).drop("tag")
-        return (
-            grid.join(F.broadcast(one), F.lit(True))
-            .groupBy("eval_node")
-            .agg(
-                F.sum(kernel * F.col("w")).alias("kw_sum"),
-                F.sum("w").alias("w_tot"),
-                F.first("__lo").alias("__lo"),
-                F.first("__dx").alias("__dx"),
-            )
-            .select(
-                F.col("eval_node").alias("node"),
-                (F.col("__lo") + F.col("eval_node") * F.col("__dx")).alias("grid_x"),
-                (F.col("kw_sum") / F.col("w_tot")).alias("pdf"),
-            )
-        )
+def kde_convolve_local(rows, ngrid: int) -> dict[str, tuple[np.ndarray, np.ndarray]]:
+    """A11 phase 2 on the driver: ``kde_1d_multi``'s grid convolution
+    applied to the collected rows of ``kde_bin_multi``. Returns
+    ``{tag: (grid_x, pdf)}``, two float64 arrays of ``ngrid`` values
+    per tag present in ``rows``.
 
-    return {t: _convolve(t) for t in tags}
+    Same elementwise sequence as the Spark expression,
+    ``exp(-0.5·((e−n)·dx/bw)²)·(1/(bw·√(2π)))`` then ``Σ(k·w)/Σw`` and
+    ``grid_x = lo + e·dx``; only the summation order differs. Rows are
+    sorted by ``(tag, node)`` first, so the sums do not depend on the
+    order the rows were collected in."""
+    by_tag: dict[str, list] = {}
+    for r in sorted(rows, key=lambda r: (r["tag"], r["node"])):
+        by_tag.setdefault(r["tag"], []).append(r)
+    e = np.arange(ngrid)
+    out = {}
+    for tag, rs in by_tag.items():
+        lo, dx, bw = rs[0]["__lo"], rs[0]["__dx"], rs[0]["__bw"]
+        node = np.array([r["node"] for r in rs])
+        w = np.array([r["w"] for r in rs], dtype="float64")
+        u = (e[:, None] - node[None, :]) * dx / bw
+        k = np.exp(-0.5 * (u * u)) * (1.0 / (bw * math.sqrt(2.0 * math.pi)))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            pdf = (k * w).sum(axis=1) / w.sum()
+        out[tag] = (lo + e * dx, pdf)
+    return out
+
+
+def _uniform_bracket(
+    q: Column, lo: Column, hi: Column, nmax: Column, farr: Column
+) -> tuple[Column, Column]:
+    """``np.interp`` of ``q`` against the node-ordered values ``farr``
+    on the uniform grid ``lo..hi`` with last node ``nmax``: the bracket
+    index is arithmetic, the two bracketing values are array lookups
+    (``F.get``, 0-based). Queries outside the grid clamp to the edge
+    values. Returns ``(value, slope)``; the slope ``(f1−f0)/dx`` is the
+    interpolant's piecewise-constant derivative, extrapolated with the
+    edge segment's slope."""
+    dx = (hi - lo) / nmax
+    pos = (q - lo) / dx
+    idx = F.least(F.greatest(F.floor(pos), F.lit(0)), nmax - 1).cast("int")
+    f0 = F.get(farr, idx)
+    f1 = F.get(farr, idx + 1)
+    frac_clamped = F.least(F.greatest(pos - idx, F.lit(0.0)), F.lit(1.0))
+    return f0 + (f1 - f0) * frac_clamped, (f1 - f0) / dx
 
 
 def interp_uniform_grid(
@@ -617,15 +688,19 @@ def interp_uniform_grid(
     out_col: str = "interp",
     deriv_col: str | None = None,
 ) -> DataFrame:
-    """J3 (fast path): ``np.interp`` against a UNIFORM grid — bracket
-    index is computed arithmetically, then two broadcast hash
-    equi-joins fetch the bracketing values. No range join, no sort;
-    O(data) and shuffle-free at any query count.
+    """J3 (fast path): ``np.interp`` against a UNIFORM grid. One
+    one-row aggregate over the grid packs its bounds and node-ordered
+    values, ``(lo, hi, nmax, farr)``, into a single broadcast; each
+    query row then fetches its two bracketing values by array index
+    (``_uniform_bracket``, shared with ``interp_uniform_literal``). No
+    join probe, no range join, no sort; O(data) and shuffle-free at any
+    query count.
 
     Out-of-range queries clamp to the boundary values, matching
     np.interp. The grid frame must carry an integer ``node`` column
     (0..g-1) and uniform ``grid_x`` spacing — exactly what ``kde_1d``
-    emits.
+    emits. NULL queries take node 0's value; an empty grid yields NULL
+    out/deriv columns, with every query row kept.
 
     ``deriv_col``: additionally emit the first derivative of the
     piecewise-linear interpolant — the segment slope ``(f1−f0)/dx`` —
@@ -633,21 +708,6 @@ def interp_uniform_grid(
     (core/likelihood.py:73: ``fy_jac`` for the us_lgw weight), which
     is piecewise-constant and extrapolates with the edge segment's
     slope.
-
-    Plan shape (round-16): ONE one-row aggregate over the grid packs
-    bounds AND the node-ordered f-array into a single broadcast
-    (``(lo, hi, nmax, farr)``); each query row then fetches its two
-    bracketing values by array index (``F.get`` — 0-based, NULL out of
-    range). The previous shape was three broadcasts per call (a bounds
-    aggregate + two bracket hash joins), i.e. three broadcast builds
-    and two join probes per query row where one ≤32 KB array lookup
-    suffices — the grid is ≤4096 rows by the kde contract. Values are
-    bit-identical: same bounds arithmetic, same f values, same clamp
-    sequence (oracle-pinned via j3_interp / p14_p17 / the m4 loop
-    golden). Degenerate inputs degrade exactly as the join path did —
-    rows preserved; NULL queries clamp to node 0's value (both paths:
-    ``greatest(NULL, 0)`` selects 0 for the bracket index and 0.0 for
-    the fraction); empty grids yield NULL out/deriv columns.
     """
     g = grid.select(
         F.col(node_col).alias("__n"),
@@ -666,17 +726,42 @@ def interp_uniform_grid(
         ).alias("__farr"),
     )
     q = queries.crossJoin(F.broadcast(packed))
-    dx = (F.col("__hi") - F.col("__lo")) / F.col("__nmax")
-    pos = (F.col(q_col) - F.col("__lo")) / dx
-    idx = F.least(F.greatest(F.floor(pos), F.lit(0)), F.col("__nmax") - 1).cast("int")
-    f0 = F.get("__farr", idx)
-    f1 = F.get("__farr", idx + 1)
-    frac_clamped = F.least(F.greatest(pos - idx, F.lit(0.0)), F.lit(1.0))
-    val = f0 + (f1 - f0) * frac_clamped
+    val, slope = _uniform_bracket(
+        F.col(q_col), F.col("__lo"), F.col("__hi"), F.col("__nmax"), F.col("__farr")
+    )
     out = q.withColumn(out_col, val)
     if deriv_col is not None:
-        out = out.withColumn(deriv_col, (f1 - f0) / dx)
+        out = out.withColumn(deriv_col, slope)
     return out.drop("__lo", "__hi", "__nmax", "__farr")
+
+
+def interp_uniform_literal(
+    queries: DataFrame,
+    grid_x: np.ndarray,
+    f: np.ndarray,
+    q_col: str,
+    out_col: str = "interp",
+    deriv_col: str | None = None,
+) -> DataFrame:
+    """``interp_uniform_grid`` against a driver-side uniform grid
+    (``kde_convolve_local``'s output): the values fold into the plan as
+    ONE string literal split into an ``array<double>`` (a literal per
+    node would cost a py4j call each), so the plan has no aggregate and
+    no broadcast. Same bracket arithmetic and results; ``repr`` of a
+    float round-trips exactly through Spark's string→double cast. An
+    empty grid yields NULL out/deriv columns."""
+    if len(f) == 0:
+        val = slope = F.lit(None).cast("double")
+    else:
+        farr = F.split(F.lit(",".join(map(repr, f.tolist()))), ",").cast("array<double>")
+        val, slope = _uniform_bracket(
+            F.col(q_col), F.lit(float(grid_x[0])), F.lit(float(grid_x[-1])),
+            F.lit(len(f) - 1), farr,
+        )
+    out = queries.withColumn(out_col, val)
+    if deriv_col is not None:
+        out = out.withColumn(deriv_col, slope)
+    return out
 
 
 def interp_linear(
@@ -754,3 +839,27 @@ def log_pdf_error(
         .filter(~F.isnan("d") & F.col("d").isNotNull())
     )
     return trapz(diff, "x", "d").withColumnRenamed("integral", "log_pdf_error")
+
+
+def log_pdf_error_local(
+    grid_a: tuple[np.ndarray, np.ndarray],
+    grid_b: tuple[np.ndarray, np.ndarray],
+) -> float | None:
+    """``log_pdf_error`` (default floor) on two driver-side
+    ``(grid_x, pdf)`` grids (``kde_convolve_local``'s output): the same
+    join on the grid axis, clipped logs, NaN filter and trapezoid sum
+    in ``x`` order. None
+    where the Spark operator yields NULL: an empty grid, or fewer than
+    two joined points left after the filter."""
+    x, ia, ib = np.intersect1d(grid_a[0], grid_b[0], return_indices=True)
+    fa, fb = grid_a[1][ia], grid_b[1][ib]
+    with np.errstate(invalid="ignore"):
+        d = np.abs(
+            np.maximum(np.log(np.maximum(fa, 1e-300)), -6.0)
+            - np.maximum(np.log(np.maximum(fb, 1e-300)), -6.0)
+        )
+    keep = ~np.isnan(d)
+    x, d = x[keep], d[keep]
+    if len(x) < 2:
+        return None
+    return float(np.sum((x[1:] - x[:-1]) * (d[1:] + d[:-1]) / 2.0))

@@ -449,3 +449,79 @@ def test_histogram_degenerate_and_empty_inputs(spark):
     empty = spark.createDataFrame([], "point_id BIGINT, y DOUBLE")
     erows = histogram(empty, "y", nbins=4, lo=0.0, hi=1.0).collect()
     assert len(erows) == 4 and all(r["cnt"] == 0 and r["pdf"] == 0.0 for r in erows)
+
+
+def test_driver_kde_path_matches_spark_operators(spark, vdf):
+    """The driver path — ``kde_bin_multi`` rows convolved by
+    ``kde_convolve_local``, ``log_pdf_error_local`` and
+    ``interp_uniform_literal`` — agrees with ``kde_1d_multi``,
+    ``log_pdf_error`` and ``interp_uniform_grid`` to 1e-12, and the
+    order the binned rows arrive in changes no output bit."""
+    import random
+
+    from bigdata_quality_assessment_spark.operators.density import (
+        interp_uniform_literal,
+        kde_1d_multi,
+        kde_bin_multi,
+        kde_convolve_local,
+        log_pdf_error_local,
+    )
+
+    two = vdf.withColumn("z", F.col("y") * 0.5 + 1.0)
+    specs = [
+        {"tag": "pred", "col": "y", "bw": 0.4, "range_cols": ["y", "z"]},
+        {"tag": "truth", "col": "z", "bw": 0.4, "range_cols": ["y", "z"]},
+        {"tag": "pool", "col": "y", "bw": 0.3, "where": F.col("y") > 0.5,
+         "bounds": (0.4, 6.0)},
+    ]
+    rows = kde_bin_multi(two, specs, ngrid=64).collect()
+    local = kde_convolve_local(rows, 64)
+    frames = kde_1d_multi(two, specs, ngrid=64)
+    assert set(local) == set(frames)
+    for tag, frame in frames.items():
+        ref = frame.orderBy("node").collect()
+        gx, pdf = local[tag]
+        assert np.abs(gx - [r["grid_x"] for r in ref]).max() <= 1e-12
+        assert np.abs(pdf - [r["pdf"] for r in ref]).max() <= 1e-12
+
+    lpe = log_pdf_error(frames["pred"], frames["truth"]).first()["log_pdf_error"]
+    assert abs(log_pdf_error_local(local["pred"], local["truth"]) - lpe) <= 1e-12
+
+    qs = [-1.0, 0.4, 0.41, 2.5, 5.99, 6.0, 9.0, None]
+    qdf = spark.createDataFrame([(q,) for q in qs], "q DOUBLE")
+
+    def interp(out):
+        return {r["q"]: (r["f"], r["df"]) for r in out.collect()}
+
+    ref = interp(interp_uniform_grid(qdf, frames["pool"], "q", out_col="f", deriv_col="df"))
+    got = interp(interp_uniform_literal(qdf, *local["pool"], "q", out_col="f", deriv_col="df"))
+    assert set(got) == set(ref) == set(qs)
+    for q in qs:
+        assert np.abs(np.subtract(got[q], ref[q])).max() <= 1e-12
+
+    shuffled = list(rows)
+    random.Random(3).shuffle(shuffled)
+    again = kde_convolve_local(shuffled, 64)
+    for tag in local:
+        assert all(a.tobytes() == b.tobytes() for a, b in zip(local[tag], again[tag]))
+    assert log_pdf_error_local(again["pred"], again["truth"]) == log_pdf_error_local(
+        local["pred"], local["truth"]
+    )
+
+
+def test_driver_kde_path_empty_grid(spark):
+    """An empty grid (a series with no binned rows) gives a NULL
+    log-pdf error and NULL interpolated values, as the Spark operators
+    do; every query row is kept."""
+    from bigdata_quality_assessment_spark.operators.density import (
+        interp_uniform_literal,
+        log_pdf_error_local,
+    )
+
+    empty = (np.empty(0), np.empty(0))
+    some = (np.linspace(0.0, 1.0, 5), np.ones(5))
+    assert log_pdf_error_local(empty, some) is None
+    assert log_pdf_error_local(empty, empty) is None
+    qdf = spark.createDataFrame([(0.5,), (None,)], "q DOUBLE")
+    rows = interp_uniform_literal(qdf, *empty, "q", out_col="f", deriv_col="df").collect()
+    assert len(rows) == 2 and all(r["f"] is None and r["df"] is None for r in rows)

@@ -83,3 +83,44 @@ def test_four_explorer_loop_with_us_lgw(spark):
         sorted(m.items()) for m in res2.metrics
     ]
     pts.unpersist()
+
+
+def test_iteration_job_budget(spark):
+    """One iteration runs 3 actions and at most 6 Spark jobs: the
+    scored-pool checkpoint, the binning collect and the explorer top-k
+    collect. The grid-sized KDE work runs on the driver, not as Spark
+    jobs. Jobs are counted per job group; the difference between a 3-
+    and a 1-iteration run cancels the loop's set-up jobs."""
+    pts = grid_points_2d(spark, 20).cache()
+    pts.count()
+    init = pts.filter(F.col("point_id") % 8 == 0)
+    sc = spark.sparkContext
+    jobs = {}
+    for n_iter in (1, 3):
+        group = f"loop-job-budget-{n_iter}"
+        sc.setJobGroup(group, group)
+        try:
+            active_sampling_loop(
+                pts, ["x1", "x2"], n_iter=n_iter, n_models=2, ngrid=64, bw=0.1,
+                init_train=init,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n_iter] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert (jobs[3] - jobs[1]) / 2 <= 6, jobs
+    pts.unpersist()
+
+
+def test_exhausted_pool(spark):
+    """Three explorers drain a 9-point pool in three iterations; the
+    fourth iteration has no candidates: an empty pool grid, no picks,
+    and its metrics still reported."""
+    pts = grid_points_2d(spark, 3)
+    init = pts.filter(F.col("point_id") % 4 == 0)
+    res = active_sampling_loop(
+        pts, ["x1", "x2"], n_iter=4, n_models=2, ngrid=64, bw=0.1, init_train=init
+    )
+    assert res.train.count() == 12
+    assert res.pool.count() == 0
+    assert len(res.metrics) == 4
+    assert [m["train_rows"] for m in res.metrics] == [3, 6, 9, 12]
