@@ -547,26 +547,31 @@ def doc_fingerprints(
 
 def _shingle_expr(t: Column, k: int, mode: str) -> Column:
     """Array of k-shingles of ``t`` — EMPTY when the doc is shorter
-    than k (``F.sequence(1, 0)`` would count DOWN, so the upper bound
-    is guarded and the whole expression gated on length)."""
-    if mode == "word":
-        toks = tokens(t)
-        n = F.size(toks)
-        body = F.transform(
-            F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        )
-    elif mode == "char":
-        n = F.length(t)
-        body = F.transform(
-            F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-            lambda i: F.substring(t, i, k),
-        )
-    else:
+    than k or NULL (``F.sequence(1, 0)`` would count DOWN, so the
+    upper bound is guarded and the whole expression gated on length).
+
+    The token array (word mode) or the text (char mode) is bound ONCE
+    per row as a lambda variable — ``flatten(transform(array(src),
+    body))`` — and the per-shingle lambda reads that variable. Catalyst
+    does not reuse a common subexpression across a lambda boundary, so
+    referring to ``split(t)`` inside the per-shingle lambda would
+    re-split (and re-evaluate any inlined upstream expression such as
+    ``normalize_text``) once per shingle: O(tokens²) per document."""
+    if mode not in ("word", "char"):
         raise ValueError(f"mode must be 'word' or 'char', got {mode!r}")
-    return F.when(n >= k, F.array_distinct(body)).otherwise(
-        F.array().cast("array<string>")
-    )
+    word = mode == "word"
+
+    def shingles(s: Column) -> Column:
+        n = F.size(s) if word else F.length(s)
+        body = F.transform(
+            F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(s, i, k)) if word else F.substring(s, i, k),
+        )
+        return F.when(n >= k, F.array_distinct(body)).otherwise(
+            F.array().cast("array<string>")
+        )
+
+    return F.flatten(F.transform(F.array(tokens(t) if word else t), shingles))
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -671,7 +676,9 @@ def minhash_signatures(
     Shape chosen for scale AND single-evaluation: each shingle's
     (expensive) string hash is computed ONCE via explode, then the
     n_hashes lanes are cheap integer re-hashes inside one map-side-
-    combined aggregation (n_hashes ``min`` columns). A nested
+    combined aggregation (n_hashes ``min`` lanes, built by
+    :func:`_minhash_fold` as one parsed SQL expression — as PySpark
+    Columns the 128 lanes cost 0.3-1 s of driver time per call). A nested
     higher-order-function formulation re-evaluates the shingle array
     per lane — Catalyst does not CSE across lambda boundaries — which
     is n_hashes× the string work; the explode+groupBy shuffle moves
@@ -685,13 +692,7 @@ def minhash_signatures(
     base = ensure_min_parallelism(docs.select(id_col, text_col)).select(
         id_col, F.explode(F.transform(shingles, lambda s: F.xxhash64(s))).alias("__h")
     )
-    lanes = [
-        F.min(F.xxhash64(F.lit(i), F.col("__h"))).alias(f"__s{i}") for i in range(n_hashes)
-    ]
-    wide = base.groupBy(id_col).agg(*lanes)
-    return wide.select(
-        id_col, F.array(*[F.col(f"__s{i}") for i in range(n_hashes)]).alias("sig")
-    )
+    return _minhash_fold(base, id_col, n_hashes)
 
 
 def minhash_band_keys(
@@ -774,6 +775,35 @@ def _md5_48(col):
     return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long")
 
 
+def _minhash_fold(
+    hashes: DataFrame,
+    id_col: str,
+    n_hashes: int,
+    lane_params: list[tuple[int, int, int]] | None = None,
+) -> DataFrame:
+    """``(id, sig)`` from long-format ``(id, __h)`` shingle hashes:
+    lane i is ``min(xxhash64(i, __h))`` or, with ``lane_params``,
+    ``min((aᵢ·(__h ⊕ cᵢ) + bᵢ) mod MINHASH_P)`` (which overrides
+    ``n_hashes``), all lanes in one map-side-combined aggregate.
+
+    The aggregate is ONE SQL expression parsed on the JVM: built as
+    PySpark Columns, 128 lanes cost 0.3-1 s of driver py4j round-trips
+    per call on a 4-core host, against 17-50 ms parsed. Integer literals
+    keep the Column API's SQL typing — ``i``, ``a`` and ``b`` are INT,
+    ``c`` INT or BIGINT by magnitude — so every lane value is the
+    same."""
+    if lane_params is None:
+        lanes = [f"min(xxhash64({i}, `__h`))" for i in range(n_hashes)]
+    else:
+        lanes = [
+            f"min((({a} * (`__h` ^ {c})) + {b}) % {MINHASH_P})"
+            for a, b, c in lane_params
+        ]
+    return hashes.groupBy(id_col).agg(
+        F.expr(f"array({', '.join(lanes)})").alias("sig")
+    )
+
+
 def near_dedup_minhash(
     docs: DataFrame,
     text_col: str = "text",
@@ -819,7 +849,7 @@ def near_dedup_minhash(
     # BOTH verify sides all need the per-doc distinct shingle hashes;
     # as separate subtrees each reference re-executes the (expensive:
     # tokenize + k-gram + hash) shingling scan — four corpus scans per
-    # action, and the dominant noise amplifier in the bench. The lazy
+    # action, and the dominant noise amplifier in the bench. The
     # barrier stores the narrow ``(doc_id, hash BIGINT)`` long format
     # (16 bytes/shingle, MEMORY_AND_DISK — comparable to the text it
     # came from and far cheaper than 4× regex work at 100 TB); every
@@ -846,28 +876,9 @@ def near_dedup_minhash(
     hashes = ensure_min_parallelism(docs.select(id_col, text_col)).select(
         id_col, F.explode(F.transform(sh, lambda s: shingle_hash(s))).alias("__h")
     ).localCheckpoint(eager=True)
-    if lane_params is not None:
-        n_hashes = len(lane_params)
-        lanes = [
-            F.min(
-                (F.lit(a) * F.col("__h").bitwiseXOR(F.lit(c)) + F.lit(b))
-                % F.lit(MINHASH_P)
-            ).alias(f"__s{i}")
-            for i, (a, b, c) in enumerate(lane_params)
-        ]
-    else:
-        lanes = [
-            F.min(F.xxhash64(F.lit(i), F.col("__h"))).alias(f"__s{i}")
-            for i in range(n_hashes)
-        ]
-    sigs = (
-        hashes.groupBy(id_col)
-        .agg(*lanes)
-        .select(
-            id_col,
-            F.array(*[F.col(f"__s{i}") for i in range(n_hashes)]).alias("sig"),
-        )
-    )
+    # one parsed SQL aggregate for all lanes: built per Column, the
+    # 128-lane fold costs 0.3-1 s of driver time per call
+    sigs = _minhash_fold(hashes, id_col, n_hashes, lane_params)
     cands = minhash_lsh_candidates(sigs, bands, id_col, materialize=True)
     # separate light count agg — the sizes path must not re-run the
     # 128-lane min aggregation it doesn't need
@@ -1016,8 +1027,11 @@ def simhash_near_dedup(
 
     ``signatures``: optional precomputed ``simhash(docs, ...)`` frame —
     pass it when the caller ALSO consumes the signatures so the
-    shingling + 64-vote pass runs once, not once per consumer (put a
-    lazy ``localCheckpoint`` on it; this function adds one otherwise)."""
+    shingling + 64-vote pass runs once, not once per consumer. Put an
+    EAGER ``localCheckpoint(eager=True)`` on it, as this function does
+    for the signatures it builds itself: the two band-join sides read
+    the frame in one job and would race a lazy barrier's cold blocks
+    into recomputing it (see the barrier comment below)."""
     if not 0 <= max_hamming <= 3:
         raise ValueError("4x16-bit banding is complete only for max_hamming <= 3")
     # EAGER barrier on the (id, simhash) frame — 16 bytes/doc. The a/b
@@ -1287,23 +1301,7 @@ def fuzzy_decontaminate(
         hashes = frame.select(
             id_col, F.explode(F.transform(sh, lambda s: _md5_48(s))).alias("__h")
         )
-        lanes = [
-            F.min(
-                (F.lit(a) * F.col("__h").bitwiseXOR(F.lit(c)) + F.lit(b))
-                % F.lit(MINHASH_P)
-            ).alias(f"__s{i}")
-            for i, (a, b, c) in enumerate(lane_params)
-        ]
-        return (
-            hashes.groupBy(id_col)
-            .agg(*lanes)
-            .select(
-                id_col,
-                F.array(
-                    *[F.col(f"__s{i}") for i in range(len(lane_params))]
-                ).alias("sig"),
-            )
-        )
+        return _minhash_fold(hashes, id_col, n_hashes, lane_params)
 
     sig_d = _sigs(docs)
     sig_b = _sigs(benchmark)

@@ -10,6 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdata_quality_assessment_spark.operators.text import (
+    MINHASH_P,
+    _md5_48,
+    _minhash_fold,
     exact_dedup,
     jaccard_pairs,
     language_id,
@@ -42,18 +45,85 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id BIGINT, text STRING").cache()
 
 
-def _pyshingles(text: str, k: int = 3) -> set[str]:
+def _pyshingles(text: str | None, k: int = 3, mode: str = "word") -> set[str]:
+    if text is None:
+        return set()
+    if mode == "char":
+        return {text[i : i + k] for i in range(len(text) - k + 1)}
     toks = text.split(" ")
     return {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)} if len(toks) >= k else set()
 
 
-def test_shingle_sets_match_python(docs):
-    got = {
-        (r["doc_id"], r["shingle"]) for r in shingle_sets(docs, k=3, mode="word").collect()
-    }
-    pdf = docs.toPandas()
-    expect = {(r.doc_id, s) for r in pdf.itertuples() for s in _pyshingles(r.text)}
-    assert got == expect
+@pytest.fixture(scope="module")
+def edge_docs(spark, docs):
+    """``docs`` plus the shingling edge cases: NULL text, the empty
+    string, a double space (an empty token), exactly k=3 tokens, and
+    fewer than k tokens."""
+    edges = spark.createDataFrame(
+        [(10, None), (11, ""), (12, "one  two three"), (13, "one two three"), (14, "one two")],
+        "doc_id BIGINT, text STRING",
+    )
+    return docs.unionByName(edges).cache()
+
+
+def test_shingle_sets_match_python(edge_docs):
+    pdf = edge_docs.toPandas()
+    for mode in ("word", "char"):
+        got = [
+            (r["doc_id"], r["shingle"])
+            for r in shingle_sets(edge_docs, k=3, mode=mode).collect()
+        ]
+        assert len(got) == len(set(got)), mode  # distinct per document
+        expect = {
+            (i, s)
+            for i, text in pdf.itertuples(index=False)
+            for s in _pyshingles(text, 3, mode)
+        }
+        assert set(got) == expect, mode
+
+
+def test_shingle_expr_splits_each_document_once(docs):
+    """The token array is bound once per row: the optimized plan holds
+    one ``split(``, not one per reference inside the per-shingle
+    lambda."""
+    plan = (
+        shingle_sets(docs, k=3, mode="word")._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert plan.count("split(") == 1, plan
+
+
+def _per_column_fold(hashes, lanes):
+    """The lane-by-lane Column construction of a MinHash fold: one
+    aliased ``min`` Column per lane, then an array over the aliases."""
+    wide = hashes.groupBy("doc_id").agg(*[l.alias(f"__s{i}") for i, l in enumerate(lanes)])
+    return wide.select(
+        "doc_id", F.array(*[F.col(f"__s{i}") for i in range(len(lanes))]).alias("sig")
+    )
+
+
+def test_minhash_fold_matches_per_column_lanes(spark):
+    rows = [(i, " ".join(f"w{(i * 7 + j * 3) % 23}" for j in range(12))) for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
+    words = shingle_sets(df, k=3)
+    hx = words.select("doc_id", F.xxhash64("shingle").alias("__h"))
+    ref = _per_column_fold(hx, [F.min(F.xxhash64(F.lit(i), F.col("__h"))) for i in range(16)])
+    got = _minhash_fold(hx, "doc_id", 16)
+    assert got.schema == ref.schema
+    assert sorted(got.collect()) == sorted(ref.collect())
+
+    # pinned family: c spans INT (< 2^31) and BIGINT (up to 2^48) literals
+    lanes = [(5, 17, 3), (8191, (1 << 20) - 1, (1 << 31) - 1), (4097, 0, 1 << 31),
+             (3, 999, (1 << 48) - 1), (1, 1, 0), (77, 12345, 123456789012)]
+    hm = words.select("doc_id", _md5_48(F.col("shingle")).alias("__h"))
+    ref = _per_column_fold(hm, [
+        F.min((F.lit(a) * F.col("__h").bitwiseXOR(F.lit(c)) + F.lit(b)) % F.lit(MINHASH_P))
+        for a, b, c in lanes
+    ])
+    got = _minhash_fold(hm, "doc_id", n_hashes=128, lane_params=lanes)
+    assert got.schema == ref.schema
+    got_rows = sorted(got.collect())
+    assert got_rows == sorted(ref.collect())
+    assert all(len(r["sig"]) == len(lanes) for r in got_rows)
 
 
 def test_jaccard_pairs_match_python(docs):
